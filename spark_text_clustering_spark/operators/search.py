@@ -19,12 +19,15 @@ scales with nnz, not vocab size).
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._registry import Registry
 from ..catalog import load_table
 from ..ml.vectorize import EmptyCorpusError, vectorize
+from .similarity import index_artifact
 
 REG = Registry()
 
@@ -257,153 +260,24 @@ GROUP BY tf.doc_id
 """
 
 
-_BM25_INDEX_MEMO: dict = {}
 _BM25_BUCKETS = 64  # postings partition count: bounded at ANY corpus size
 
 
-def build_bm25_index(spark: SparkSession, sf_dir: str) -> str | None:
-    """One-time inverted-index build for BM25 serving — the durable
-    artifact twin of the ANN stored indexes (similarity.py:480).
-
-    Layout: ``postings/`` (term, doc_id, tf) partitioned by
-    ``bucket = pmod(xxhash64(term), 64)`` — NOT by term: a per-term
-    directory layout is millions of directories at web scale, while the
-    bucket count is fixed, so directory-level pruning stays cheap and a
-    probe for q query terms reads at most q of the 64 buckets. Plus
-    ``docstats/`` (doc_id, dl), ``df/`` (term, df — term-count-sized)
-    and ``stats/`` (n, avgdl — one row). Memoized per sf_dir; returns
-    None on an empty corpus."""
-    if sf_dir in _BM25_INDEX_MEMO:
-        return _BM25_INDEX_MEMO[sf_dir]
-    import tempfile
-
+def _bm25_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, arr): each non-null document's lowercased whitespace tokens."""
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), r"\s+"), lambda x: F.length(x) >= 1
-        ).alias("arr"),
-    ).where(F.size("arr") >= 1)
-    if toks.limit(1).count() == 0:
-        return None
-    base = tempfile.mkdtemp(prefix="bm25_index_")
-    tf = (
-        toks.select("doc_id", F.explode("arr").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    (
-        tf.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(_BM25_BUCKETS)))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{base}/postings")
-    )
-    dl = toks.select("doc_id", F.size("arr").alias("dl"))
-    dl.write.mode("overwrite").parquet(f"{base}/docstats")
-    tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).write.mode(
-        "overwrite"
-    ).parquet(f"{base}/df")
-    dl.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")).write.mode(
-        "overwrite"
-    ).parquet(f"{base}/stats")
-    _BM25_INDEX_MEMO[sf_dir] = base
-    return base
-
-
-@REG.register("search_bm25_stored", oracle=_BM25_ORACLE)
-def search_bm25_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 scoring against the STORED inverted index: the query terms'
-    hash buckets become a partition filter on the postings table, so the
-    probe scans at most |query terms| of the 64 bucket directories
-    (directory-level pruning, asserted in tests/test_search.py) instead
-    of re-tokenizing the corpus. This is the serving shape at 100 TB:
-    the index build is a one-time batch job; per-query cost is bounded
-    by posting-list size, not corpus size. Must reproduce
-    ``search_bm25_scores`` EXACTLY (same oracle, equality-tested) —
-    identical Robertson-idf formula over identical stored aggregates."""
-    built = build_bm25_index(spark, sf_dir)
-    if built is None:
-        return spark.createDataFrame([], "doc_id long, n_terms_hit bigint, bm25 double")
-    terms = list(_BM25_TERMS)
-    # model-sized collect: q bucket ids, computed with the SAME hash the
-    # writer used so the filter prunes at the directory level
-    probed = sorted(
-        r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(_BM25_BUCKETS)).alias("b"))
-        .distinct()
-        .collect()
-    )
-    postings = (
-        spark.read.parquet(f"{built}/postings")
-        .where(F.col("bucket").isin(probed))
-        .where(F.col("term").isin(terms))
-        .select("doc_id", "term", "tf")
-    )
-    dl = spark.read.parquet(f"{built}/docstats")
-    stats = spark.read.parquet(f"{built}/stats")
-    # df for the query terms only — but computed over the FULL stored df
-    # table, so values equal the live twin's corpus-wide counts
-    df_t = spark.read.parquet(f"{built}/df").where(F.col("term").isin(terms))
-    idf = df_t.crossJoin(F.broadcast(stats)).select(
-        "term",
-        F.log(1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("idf"),
-    )
-    k1, b = _BM25_K1, _BM25_B
-    return (
-        postings.join(F.broadcast(idf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_hit"),
-            F.round(
-                F.sum(
-                    F.col("idf")
-                    * F.col("tf")
-                    * (k1 + 1)
-                    / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-                ),
-                6,
-            ).alias("bm25"),
-        )
-    )
-
-
-@REG.register("search_bm25_scores", oracle=_BM25_ORACLE)
-def search_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 relevance of every document against a fixed query, computed
-    relationally (Robertson idf with Lucene's +1, k1=1.2, b=0.75).
-
-    Unlike ``search_tfidf_topk`` (whose weights live in fitted
-    CountVectorizer/IDF model state → rows-only check), every BM25 input
-    (tf, df, dl, avgdl, N) is a relational aggregate of the corpus, so
-    the whole scorer has an exact DuckDB oracle. Plan shape: one token
-    explode filtered to the query terms (scan-local predicate — only
-    query-term rows survive to the shuffle), per-term df and corpus
-    stats are term-count-sized broadcasts, one per-doc aggregation.
-    Scores are returned for all matching docs rather than rank-limited:
-    cross-engine float ranking at tie boundaries is the one
-    nondeterminism a value-hash gate cannot absorb, and the caller's
-    top-k is a TakeOrderedAndProject away."""
-    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = docs.select(
+    return docs.select(
         "doc_id",
         F.filter(
             F.split(F.lower(F.col("text")), r"\s+"), lambda x: F.length(x) >= 1
         ).alias("arr"),
     )
-    dl = toks.where(F.size("arr") >= 1).select("doc_id", F.size("arr").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    )
-    tf = (
-        toks.select("doc_id", F.explode("arr").alias("term"))
-        .where(F.col("term").isin(list(_BM25_TERMS)))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+
+
+def _bm25(tf: DataFrame, df_t: DataFrame, dl: DataFrame, stats: DataFrame) -> DataFrame:
+    """Per-doc BM25 from the four relational aggregates both scorers
+    share: (doc_id, term, tf), (term, df), (doc_id, dl) and the one-row
+    (n, avgdl). Robertson idf with Lucene's +1, k1=1.2, b=0.75."""
     idf = df_t.crossJoin(F.broadcast(stats)).select(
         "term",
         F.log(1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("idf"),
@@ -427,6 +301,121 @@ def search_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bm25"),
         )
     )
+
+
+def build_bm25_index(spark: SparkSession, sf_dir: str) -> str | None:
+    """One-time inverted-index build for BM25 serving — the durable
+    artifact twin of the ANN stored indexes, held in the same artifact
+    cache (``similarity.index_artifact``, keyed per application, sf_dir
+    and kind; a cached index whose directory is gone is rebuilt).
+
+    Layout: ``postings/`` (term, doc_id, tf) partitioned by
+    ``bucket = pmod(xxhash64(term), 64)`` — NOT by term: a per-term
+    directory layout is millions of directories at web scale, while the
+    bucket count is fixed, so directory-level pruning stays cheap and a
+    probe for q query terms reads at most q of the 64 buckets. Plus
+    ``docstats/`` (doc_id, dl), ``df/`` (term, df — term-count-sized)
+    and ``stats/`` (n, avgdl — one row). Returns the base dir, or None
+    on an empty corpus."""
+
+    def write() -> str | None:
+        toks = _bm25_tokens(spark, sf_dir).where(F.size("arr") >= 1)
+        if toks.limit(1).count() == 0:
+            return None
+        base = tempfile.mkdtemp(prefix="bm25_index_")
+        tf = (
+            toks.select("doc_id", F.explode("arr").alias("term"))
+            .groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+        )
+        (
+            tf.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(_BM25_BUCKETS)))
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(f"{base}/postings")
+        )
+        dl = toks.select("doc_id", F.size("arr").alias("dl"))
+        dl.write.mode("overwrite").parquet(f"{base}/docstats")
+        tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).write.mode(
+            "overwrite"
+        ).parquet(f"{base}/df")
+        dl.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")).write.mode(
+            "overwrite"
+        ).parquet(f"{base}/stats")
+        return base
+
+    art = index_artifact(spark, sf_dir, "bm25", (), write)
+    return None if art is None else art.base
+
+
+@REG.register("search_bm25_stored", oracle=_BM25_ORACLE)
+def search_bm25_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 scoring against the STORED inverted index: the query terms'
+    hash buckets become a partition filter on the postings table, so the
+    probe scans at most |query terms| of the 64 bucket directories
+    (directory-level pruning, asserted in tests/test_search.py) instead
+    of re-tokenizing the corpus. This is the serving shape at 100 TB:
+    the index build is a one-time batch job; per-query cost is bounded
+    by posting-list size, not corpus size. Must reproduce
+    ``search_bm25_scores`` EXACTLY (same oracle, equality-tested) — the
+    same `_bm25` scorer over identical stored aggregates."""
+    built = build_bm25_index(spark, sf_dir)
+    if built is None:
+        return spark.createDataFrame([], "doc_id long, n_terms_hit bigint, bm25 double")
+    terms = list(_BM25_TERMS)
+    # model-sized collect: q bucket ids, computed with the SAME hash the
+    # writer used so the filter prunes at the directory level
+    probed = sorted(
+        r["b"]
+        for r in spark.createDataFrame([(t,) for t in terms], "term string")
+        .select(F.pmod(F.xxhash64("term"), F.lit(_BM25_BUCKETS)).alias("b"))
+        .distinct()
+        .collect()
+    )
+    postings = (
+        spark.read.parquet(f"{built}/postings")
+        .where(F.col("bucket").isin(probed))
+        .where(F.col("term").isin(terms))
+        .select("doc_id", "term", "tf")
+    )
+    # df for the query terms only — but computed over the FULL stored df
+    # table, so values equal the live twin's corpus-wide counts
+    return _bm25(
+        postings,
+        spark.read.parquet(f"{built}/df").where(F.col("term").isin(terms)),
+        spark.read.parquet(f"{built}/docstats"),
+        spark.read.parquet(f"{built}/stats"),
+    )
+
+
+@REG.register("search_bm25_scores", oracle=_BM25_ORACLE)
+def search_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 relevance of every document against a fixed query, computed
+    relationally (Robertson idf with Lucene's +1, k1=1.2, b=0.75).
+
+    Unlike ``search_tfidf_topk`` (whose weights live in fitted
+    CountVectorizer/IDF model state → rows-only check), every BM25 input
+    (tf, df, dl, avgdl, N) is a relational aggregate of the corpus, so
+    the whole scorer has an exact DuckDB oracle. Plan shape: one token
+    explode filtered to the query terms (scan-local predicate — only
+    query-term rows survive to the shuffle), per-term df and corpus
+    stats are term-count-sized broadcasts, one per-doc aggregation.
+    Scores are returned for all matching docs rather than rank-limited:
+    cross-engine float ranking at tie boundaries is the one
+    nondeterminism a value-hash gate cannot absorb, and the caller's
+    top-k is a TakeOrderedAndProject away."""
+    toks = _bm25_tokens(spark, sf_dir)
+    dl = toks.where(F.size("arr") >= 1).select("doc_id", F.size("arr").alias("dl"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
+    )
+    tf = (
+        toks.select("doc_id", F.explode("arr").alias("term"))
+        .where(F.col("term").isin(list(_BM25_TERMS)))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    return _bm25(tf, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")), dl, stats)
 
 
 _PHRASE = ("merge", "join")

@@ -172,8 +172,6 @@ _BNLJ_WHITELIST = {
     # round 7b (registry-driven audit widened coverage to every key):
     "array_intersect_semi",  # 1-row collected top-10 array x docs (text.py:314)
     "hll_sketch_build_merge",  # per-shard 1-row sketch aggregates cross-merged
-    "knn_cosine_ivf",  # broadcast centroids + broadcast query set x pruned cells
-    "knn_cosine_ivf_stored",  # same probe shape against the stored index
     "quantile_exact_bracket",  # 3-row bracket table broadcast range-join x values
     "tpch_q11_important_stock",  # scalar subquery: 1-row global threshold
     "tpch_q22_global_sales",  # scalar subquery: 1-row avg(c_acctbal)

@@ -527,3 +527,63 @@ def test_silhouette_bounds_and_totals(spark):
         .count()
     )
     assert sum(r["n_points"] for r in rows) == n
+
+
+def _stored_vs_live(kind):
+    """(build fn, stored key, live key) for one index kind."""
+    from spark_text_clustering_spark.operators import search as SE
+    from spark_text_clustering_spark.operators import similarity as S
+
+    if kind == "bm25":
+        return SE.build_bm25_index, SE.search_bm25_stored, SE.search_bm25_scores
+    return (
+        getattr(S, f"build_{kind}_index"),
+        getattr(S, f"knn_cosine_{kind}_stored"),
+        getattr(S, f"knn_cosine_{kind}"),
+    )
+
+
+@pytest.mark.parametrize("kind", ["ivf", "pq", "ivfpq", "lsh", "bm25"])
+def test_stored_probe_rebuilds_a_removed_index_dir(spark, kind):
+    """A cached index whose base dir has vanished (a tmp cleaner, a
+    manual rm) must be rebuilt, not probed at a dead path: the stored
+    key then returns exactly the live key's rows."""
+    import os
+    import shutil
+
+    from .conftest import SF_ORACLE
+
+    build, stored, live = _stored_vs_live(kind)
+    built = build(spark, SF_ORACLE)
+    base = os.path.dirname(built[0]) if isinstance(built, tuple) else built
+    shutil.rmtree(base)
+    got = sorted(tuple(r) for r in stored(spark, SF_ORACLE).collect())
+    assert got == sorted(tuple(r) for r in live(spark, SF_ORACLE).collect())
+    assert got, f"{kind}: empty result proves nothing"
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq", "lsh"])
+def test_index_builds_release_their_fit_checkpoints(spark, tmp_path, kind):
+    """Each build on a fresh corpus copy must leave no checkpoint pinned:
+    its fit-time localCheckpoint (the KMeans / LSH fit input) is dead
+    once the index is written, so it must not stay pinned for the rest
+    of the session."""
+    import shutil
+
+    build = _stored_vs_live(kind)[0]
+    sc = spark.sparkContext
+
+    def fresh_copy(i):
+        sf = tmp_path / f"sf{i}"
+        sf.mkdir()
+        for table in ("embeddings", "documents"):
+            shutil.copyfile(f"{SF_SMALL}/{table}.parquet", sf / f"{table}.parquet")
+        return str(sf)
+
+    build(spark, fresh_copy(0))  # warm
+    before = len(sc._jsc.getPersistentRDDs())
+    for i in range(1, 3):
+        assert build(spark, fresh_copy(i)) is not None
+    assert len(sc._jsc.getPersistentRDDs()) == before, (
+        f"build_{kind}_index left fit-time checkpoints pinned"
+    )
