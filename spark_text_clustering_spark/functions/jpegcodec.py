@@ -156,11 +156,6 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
     return codes
 
 
-def _build_decode_map(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol, for the bit-serial entropy decoder."""
-    return {(ln, code): sym for sym, (code, ln) in _build_codes(bits, vals).items()}
-
-
 import functools
 
 

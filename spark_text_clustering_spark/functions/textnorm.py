@@ -45,33 +45,6 @@ def stopwords_sql_list() -> str:
     return f"[{inner}]"
 
 
-def register_sql_udfs(spark) -> None:
-    """Expose the engine's Python text kernels to the SQL surface
-    (``spark.sql("SELECT stem(token) ...")``) — pandas UDFs registered in
-    the session catalog, so pure-SQL users get the same stemmer/lemmatizer
-    the DataFrame pipeline uses."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from ..operators.text import _porter_lite
-    from .lemmatize import RuleLemmatizer
-
-    # note: no type annotations — `from __future__ import annotations` turns
-    # them into strings this module can't resolve for pandas_udf inference
-    def _stem(words):
-        return words.map(lambda w: _porter_lite(w) if w is not None else None)
-
-    def _lemma(words):
-        lem = RuleLemmatizer()
-        return words.map(lambda w: lem.lemma(w) if w is not None else None)
-
-    stem = pandas_udf(_stem, "string")
-    lemma = pandas_udf(_lemma, "string")
-
-    spark.udf.register("stem", stem)
-    spark.udf.register("lemma", lemma)
-
-
 # German stopword list (public knowledge, standard function words) — the
 # rebuild's counterpart of the reference's stopWords_GE.txt side input
 # (its EN/GE lists are comma-joined files; we ship both as constants and

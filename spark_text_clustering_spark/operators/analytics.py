@@ -942,7 +942,7 @@ def timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     segments each series (e.g. per month), runs this same plan per
     segment, and chains segment boundaries — a p_k re-base, not a new
     algorithm. The alternative exact path is applyInPandasWithState
-    (streaming/stateful.py) when per-row Python is acceptable."""
+    (streaming/ewma_serving.py) when per-row Python is acceptable."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value", "ts")
     a = _EWMA_ALPHA
     rn = (

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .._registry import Registry
-from ..catalog import load_table, spread
+from ..catalog import load_table, shuffle_grain, spread
 from ..functions.textnorm import stopwords_sql_list
 
 REG = Registry()
@@ -70,20 +70,6 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_dupes"))
         .select("doc_id", "n_dupes")
-    )
-
-
-def _shingles(tokens_col, n: int = 3):
-    """Token n-gram shingles via JVM array ops (no Python).
-
-    NOTE: only safe where the expression is evaluated exactly once per row
-    (a single projection). Under filters/reuse, Catalyst re-inlines the
-    tokenizer per ``element_at`` — O(T²) re-splits; use
-    ``shingle_arrays`` (explode + lead) in those plans.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.size(tokens_col) - n),
-        lambda i: F.concat_ws(" ", *[F.element_at(tokens_col, i + off + 1) for off in range(n)]),
     )
 
 
@@ -827,61 +813,59 @@ def incremental_dedup_minhash_batches(spark: SparkSession, sf_dir: str) -> DataF
     # pure task-setup overhead at that size (measured 20 s -> 12 s for
     # the 3-batch loop at 4). A production ingest sizes this to batch
     # cardinality the same way; the API itself inherits session conf.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        bounds = [(None, cuts[0]), (cuts[0], cuts[1]), (cuts[1], None)]
-        # thread the committed batches' read-back frames forward as
-        # prior_state (round 14, VERDICT r13 #3): each batch's history
-        # side is then a lazy union of per-batch parquet scans instead
-        # of a store-wide listing + partition-discovery read per batch
-        prior_bands = prior_sigs = None
-        batch_outs: list[DataFrame] = []
-        for i, (lo, hi) in enumerate(bounds):
-            part = docs
-            if lo is not None:
-                part = part.where(F.col("doc_id") > lo)
-            if hi is not None:
-                part = part.where(F.col("doc_id") <= hi)
-            bid = f"b{i:06d}"
-            batch_outs.append(
-                incremental_dedup_minhash(
-                    spark,
-                    part,
-                    store,
-                    batch_id=bid,
-                    prior_state=(
-                        (prior_bands, prior_sigs)
-                        if prior_bands is not None
-                        else None
-                    ),
+        with shuffle_grain(spark, 4):
+            bounds = [(None, cuts[0]), (cuts[0], cuts[1]), (cuts[1], None)]
+            # thread the committed batches' read-back frames forward as
+            # prior_state (round 14, VERDICT r13 #3): each batch's history
+            # side is then a lazy union of per-batch parquet scans instead
+            # of a store-wide listing + partition-discovery read per batch
+            prior_bands = prior_sigs = None
+            batch_outs: list[DataFrame] = []
+            for i, (lo, hi) in enumerate(bounds):
+                part = docs
+                if lo is not None:
+                    part = part.where(F.col("doc_id") > lo)
+                if hi is not None:
+                    part = part.where(F.col("doc_id") <= hi)
+                bid = f"b{i:06d}"
+                batch_outs.append(
+                    incremental_dedup_minhash(
+                        spark,
+                        part,
+                        store,
+                        batch_id=bid,
+                        prior_state=(
+                            (prior_bands, prior_sigs)
+                            if prior_bands is not None
+                            else None
+                        ),
+                    )
                 )
-            )
-            bsig = (
-                spark.read.parquet(f"{store}/signatures/batch_id={bid}")
-                .where(F.col("sig").isNotNull())  # fused commit: NULL = unsigned
-                .select(F.col("doc_id").alias("old_id"), F.col("sig").alias("sig_old"))
-            )
-            bband = spark.read.parquet(f"{store}/bands/batch_id={bid}").select(
-                "band", "key", F.col("doc_id").alias("old_id")
-            )
-            prior_sigs = bsig if prior_sigs is None else prior_sigs.unionAll(bsig)
-            prior_bands = (
-                bband if prior_bands is None else prior_bands.unionAll(bband)
-            )
-        # final survivor set = the union of the per-batch returns, each a
-        # lazy read-back of that batch's just-committed partitions (round
-        # 14 session 2): the store-wide listing + partition-discovery
-        # reads of signatures/ and unsigned/ were redundant — the loop
-        # already holds every batch's read-back frame. The store on disk
-        # stays the durable source of truth; this replay just skips
-        # re-discovering what it wrote moments ago.
-        out = batch_outs[0]
-        for nxt in batch_outs[1:]:
-            out = out.unionAll(nxt)
-        return out.localCheckpoint(eager=True)
+                bsig = (
+                    spark.read.parquet(f"{store}/signatures/batch_id={bid}")
+                    .where(F.col("sig").isNotNull())  # fused commit: NULL = unsigned
+                    .select(F.col("doc_id").alias("old_id"), F.col("sig").alias("sig_old"))
+                )
+                bband = spark.read.parquet(f"{store}/bands/batch_id={bid}").select(
+                    "band", "key", F.col("doc_id").alias("old_id")
+                )
+                prior_sigs = bsig if prior_sigs is None else prior_sigs.unionAll(bsig)
+                prior_bands = (
+                    bband if prior_bands is None else prior_bands.unionAll(bband)
+                )
+            # final survivor set = the union of the per-batch returns, each a
+            # lazy read-back of that batch's just-committed partitions (round
+            # 14 session 2): the store-wide listing + partition-discovery
+            # reads of signatures/ and unsigned/ were redundant — the loop
+            # already holds every batch's read-back frame. The store on disk
+            # stays the durable source of truth; this replay just skips
+            # re-discovering what it wrote moments ago.
+            out = batch_outs[0]
+            for nxt in batch_outs[1:]:
+                out = out.unionAll(nxt)
+            return out.localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(store, ignore_errors=True)
 
 

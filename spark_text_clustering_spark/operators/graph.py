@@ -193,9 +193,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the label vector, one (dst,label) count, one per-dst
     window top-1 — all shuffles carry edge/node rows. At 100 TB the
     window's partition key is the node id (no global sort), and the
-    iteration count is a fixed unroll here / a convergence loop with
-    localCheckpoint lineage cuts in production (the
-    ``pagerank_until_convergence`` discipline)."""
+    iteration count is a fixed unroll here; a convergence loop would cut
+    lineage with a localCheckpoint per iteration."""
     edges = _copurchase_edges(spark, sf_dir)  # per-call eager checkpoint
     labels = edges.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
@@ -215,78 +214,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return labels.select(
         F.col("id").alias("node_id"), F.col("label").cast("long").alias("community")
     )
-
-
-def pagerank_until_convergence(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    damping: float = _PR_DAMP,
-    tol: float = 1e-4,
-    max_iter: int = 40,
-    checkpoint_every: int = 1,
-) -> tuple[DataFrame, int, float]:
-    """Production PageRank: iterate to an L1 fixpoint instead of a fixed
-    unroll — the convergence-loop companion of the registered
-    ``graph_pagerank`` (same per-iteration join+agg; the registered key
-    is this loop frozen at 3 iterations for the SQL oracle).
-
-    Returns (ranks, iterations_run, final_l1_delta); ranks are RAW
-    (sum to 1 on a dangling-free graph). The per-iteration L1 delta —
-    one small agg on the joined old/new vectors — is the stopping
-    signal, and because it SCANS the new rank vector whole every
-    iteration, the LAZY localCheckpoint is taken every iteration by
-    default (round 15): the delta doubles as the materializer, so each
-    iteration executes exactly one round of work. A larger
-    ``checkpoint_every`` makes iteration k's delta re-execute the k
-    rounds since the last cut — measured 2x slower at every-5 on the
-    test graph with identical ranks; raise it only if checkpoint block
-    churn ever dominates (it should not: superseded blocks are dropped
-    each round). ``edges`` must contain both directions for undirected
-    semantics (as the registered key builds them); every src must have
-    at least one edge or its rank mass dangles."""
-    edges = edges.localCheckpoint(eager=True)
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    n = nodes.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, pr double"), 0, 0.0
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
-    deg = deg.localCheckpoint(eager=True)
-    pr, pr_ids = _ckpt_tracked(nodes.select("id", F.lit(1.0 / n).alias("pr")))
-    delta = float("inf")
-    it = 0
-    while it < max_iter and delta > tol:
-        new_pr = (
-            edges.join(pr, pr["id"] == edges["src"])
-            .join(deg, "src")
-            .select("dst", (F.col("pr") / F.col("d")).alias("w"))
-            .groupBy("dst")
-            .agg((F.lit((1 - damping) / n) + damping * F.sum("w")).alias("pr"))
-            .select(F.col("dst").alias("id"), "pr")
-        )
-        it += 1
-        new_ids = None
-        if it % checkpoint_every == 0:
-            # LAZY (round 13): the L1-delta aggregate below scans every
-            # new_pr partition, so it doubles as the checkpoint
-            # materializer — one job per checkpointed round, not two
-            new_pr, new_ids = _ckpt_tracked_lazy(new_pr)
-        # L1 delta: one broadcast-sized agg over the joined vectors
-        delta = (
-            new_pr.join(pr.withColumnRenamed("pr", "prev"), "id")
-            .agg(F.sum(F.abs(F.col("pr") - F.col("prev"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        pr = new_pr
-        if new_ids is not None:
-            # a NEWER checkpoint is materialized (by the delta scan) and
-            # the delta (the last read through the old chain) is computed
-            # — the superseded rank checkpoint's blocks are dead
-            # (round-11 hygiene; see _ckpt_tracked). Bounded pinning:
-            # edges + deg + latest rank.
-            _drop_ckpt(edges, pr_ids)
-            pr_ids = new_ids
-    return pr, it, float(delta)
 
 
 _PPR_DAMP = 0.85
@@ -341,7 +268,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seed count) so values sit near 1 and survive the repo's 6-decimal
     rounding. At 100 TB: identical shuffle profile to PageRank (edge-
     and node-sized), and a SPARSE start — after t iterations only
-    nodes within t hops of a seed hold mass, so the production loop
+    nodes within t hops of a seed hold mass, so a convergence loop
     can filter pr > 0 rows and the per-iteration join shrinks to the
     reached frontier (the classic local-push advantage, kept
     relational here)."""
@@ -507,10 +434,9 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge frame is localCheckpoint'ed per round: each round references
     its predecessor THREE times (directly plus through both survivor
     legs), so an unrolled lineage re-computes the predecessor 3^r
-    times — the lineage cut makes the cost linear in rounds, the same
-    discipline as `pagerank_until_convergence`. Output: surviving
-    (node_id, degree) after round 3; a production run loops to the
-    fixpoint with the identical per-round body."""
+    times — the lineage cut makes the cost linear in rounds. Output:
+    surviving (node_id, degree) after round 3; the true k-core loops to
+    the fixpoint with the identical per-round body."""
     # the per-call edge artifact is an eager checkpoint; track nothing
     # for round 0 (its blocks feed the whole cascade)
     edges, prev_ids = _copurchase_edges(spark, sf_dir), set()
@@ -673,196 +599,6 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("jaccard"),
         )
     )
-
-
-def label_propagation_until_stable(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    max_iter: int = 20,
-    checkpoint_every: int = 1,
-) -> tuple[DataFrame, int, int]:
-    """Production label propagation: iterate until NO node changes its
-    label (or ``max_iter``) — the convergence companion of the
-    registered ``graph_label_propagation`` (that key is this loop
-    frozen at 3 iterations for the SQL oracle; equality at 3 asserted
-    in test_graph). Returns (labels, iterations_run, last_change_count).
-
-    Same per-iteration body: src-keyed join, (dst,label) count, per-dst
-    window top-1 with the deterministic (count desc, label asc)
-    tiebreak. The change count is one node-keyed join + count per
-    iteration — the stopping signal, same role as PageRank's L1 delta,
-    and like it the count SCANS the new labels whole, so the lazy
-    localCheckpoint is taken every iteration by default (round 15: a
-    longer interval makes each probe re-execute every round since the
-    last cut — strictly more work). Caveat the paper documents:
-    synchronous LPA can 2-cycle on bipartite structure — ``max_iter``
-    is the guard, and a caller can drop to semi-synchronous coloring
-    if oscillation is detected (change count alternating, not
-    shrinking)."""
-    edges = edges.localCheckpoint(eager=True)
-    labels, lbl_ids = _ckpt_tracked(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-    )
-    w = Window.partitionBy("dst").orderBy(F.col("c").desc(), F.col("label").asc())
-    it, changed = 0, -1
-    while it < max_iter and changed != 0:
-        counts = (
-            edges.join(labels, labels["id"] == edges["src"])
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        new_labels = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(F.col("dst").alias("id"), "label")
-        )
-        it += 1
-        new_ids = None
-        if it % checkpoint_every == 0:
-            # LAZY (r13): the change-count join below scans every
-            # new_labels partition (filter drops rows, not partitions),
-            # so it materializes the checkpoint — one job per round
-            new_labels, new_ids = _ckpt_tracked_lazy(new_labels)
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("label", "prev"), "id"
-            )
-            .where(F.col("label") != F.col("prev"))
-            .count()
-        )
-        labels = new_labels
-        if new_ids is not None:
-            # newer checkpoint materialized (by the change-count scan),
-            # change-count (the final read through the old chain) done —
-            # free the superseded label checkpoint (round-11 hygiene)
-            _drop_ckpt(edges, lbl_ids)
-            lbl_ids = new_ids
-    return labels, it, int(changed)
-
-
-def kcore_until_fixpoint(
-    spark: SparkSession,
-    edges: DataFrame,
-    k: int,
-    *,
-    max_rounds: int = 50,
-) -> tuple[DataFrame, int]:
-    """Production k-core: peel until the edge set stops shrinking — the
-    true k-core, where the registered ``graph_kcore_peel`` freezes 3
-    rounds for its SQL oracle. Returns (surviving (node_id, degree)
-    frame, rounds_run). Per round: one degree agg + two survivor
-    joins, localCheckpoint per round (a round references its
-    predecessor three times; the cut keeps cost linear in rounds). The
-    stopping signal is the edge count, which doubles as the LAZY
-    checkpoint's materializer (round 13) — one job per round."""
-    edges, prev_ids = _ckpt_tracked(edges)
-    n_edges = edges.count()
-    rounds = 0
-    while rounds < max_rounds:
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.where(F.col("d") >= k).select(F.col("src").alias("id"))
-        # LAZY (r13): the stopping-signal count below materializes the
-        # peeled frame — one job per round instead of two
-        new_edges, new_ids = _ckpt_tracked_lazy(
-            edges.join(keep, keep["id"] == edges["src"]).drop("id")
-            .join(keep, keep["id"] == edges["dst"]).drop("id")
-        )
-        rounds += 1
-        n_new = new_edges.count()
-        edges = new_edges
-        # the peeled round's survivors are materialized by the count —
-        # the previous edge frame is dead (round-11 hygiene)
-        _drop_ckpt(edges, prev_ids)
-        prev_ids = new_ids
-        if n_new == n_edges:
-            break
-        n_edges = n_new
-    out = edges.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    ).select(F.col("src").alias("node_id"), "degree")
-    return out, rounds
-
-
-def personalized_pagerank_until_convergence(
-    spark: SparkSession,
-    edges: DataFrame,
-    seeds: DataFrame,
-    *,
-    damping: float = _PPR_DAMP,
-    tol: float = 1e-4,
-    max_iter: int = 40,
-    checkpoint_every: int = 1,
-) -> tuple[DataFrame, int, float]:
-    """Production personalized PageRank with the FRONTIER optimization
-    the registered key documents: after t iterations only nodes within
-    t hops of a seed hold mass, so the rank frame keeps ONLY pr > 0
-    rows and the per-iteration join shrinks to the reached frontier —
-    the local-push advantage (Andersen-Chung-Lang shape) kept fully
-    relational. ``seeds`` is a 1-column (id) frame. Returns (ranks —
-    pr > 0 rows only, raw scale, sums to 1 on a dangling-free graph),
-    iterations_run, final_l1_delta).
-
-    Equality contract: frozen at 3 iterations this reproduces the
-    registered ``graph_pagerank_personalized`` exactly on its nonzero
-    support (asserted in test_graph) — the teleport term only touches
-    seed rows and mass only flows along edges, so dropping exact-zero
-    rows changes nothing. The L1 delta treats absent rows as 0 via a
-    full outer join on the two sparse vectors."""
-    edges = edges.localCheckpoint(eager=True)
-    seeds = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
-    ns = seeds.count()
-    if ns == 0:
-        return spark.createDataFrame([], "id long, pr double"), 0, 0.0
-    deg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).cast("double").alias("d")
-    ).localCheckpoint(eager=True)
-    tele = seeds.select("id", F.lit((1 - damping) / ns).alias("t"))
-    pr, pr_ids = _ckpt_tracked(seeds.select("id", F.lit(1.0 / ns).alias("pr")))
-    it, delta = 0, float("inf")
-    while it < max_iter and delta > tol:
-        pushed = (
-            edges.join(pr, pr["id"] == edges["src"])  # frontier-sized join
-            .join(deg, "src")
-            .select("dst", (damping * F.col("pr") / F.col("d")).alias("w"))
-            .groupBy("dst")
-            .agg(F.sum("w").alias("w"))
-            .select(F.col("dst").alias("id"), "w")
-        )
-        new_pr = (
-            pushed.join(tele, "id", "full_outer")
-            .select(
-                "id",
-                (F.coalesce(F.col("w"), F.lit(0.0)) + F.coalesce(F.col("t"), F.lit(0.0))).alias("pr"),
-            )
-            .where(F.col("pr") > 0)
-        )
-        it += 1
-        new_ids = None
-        if it % checkpoint_every == 0:
-            # LAZY: the full-outer delta agg below materializes it (r13)
-            new_pr, new_ids = _ckpt_tracked_lazy(new_pr)
-        delta = (
-            new_pr.join(pr.withColumnRenamed("pr", "prev"), "id", "full_outer")
-            .agg(
-                F.sum(
-                    F.abs(
-                        F.coalesce(F.col("pr"), F.lit(0.0))
-                        - F.coalesce(F.col("prev"), F.lit(0.0))
-                    )
-                ).alias("d")
-            )
-            .collect()[0]["d"]
-        )
-        pr = new_pr
-        if new_ids is not None:
-            # superseded sparse-rank checkpoint freed once the newer one
-            # is materialized and the delta read it for the last time
-            _drop_ckpt(edges, pr_ids)
-            pr_ids = new_ids
-    return pr, it, float(delta)
 
 
 _DEGREE_HIST_ORACLE = f"""

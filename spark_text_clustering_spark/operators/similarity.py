@@ -1178,25 +1178,6 @@ def embedding_pca_variance(
     )
 
 
-def pca_project(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
-    """(vec_id, proj array<double>[k]) — the projection companion of
-    `embedding_pca_variance`, for feeding reduced vectors into the ANN
-    builders. Broadcast matrix multiply; no shuffle."""
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("e"))
-    )
-    feat = emb.select("vec_id", array_to_vector("e").alias("features"))
-    model = PCA(k=k, inputCol="features", outputCol="p").fit(feat)
-    return model.transform(feat).select(
-        "vec_id", vector_to_array("p").alias("proj")
-    )
-
-
 _SEM_TAU = 0.3  # cosine threshold placed INSIDE the synthetic corpus's
 # observed similarity range (max within-label cosine is 0.475; real
 # corpora have true near-dups at 0.9+, and tau is a parameter)

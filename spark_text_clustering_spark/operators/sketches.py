@@ -186,25 +186,8 @@ WHERE c.c_mktsegment = 'BUILDING'
 """
 
 
-def _bloom_positions_vec(keys):
-    """Vectorized (n, k) bit positions via splitmix64 + Kirsch-Mitzenmacher
-    double hashing — pure numpy uint64 arithmetic, no per-row Python, so
-    both the build and the map-side probe run at Arrow-batch speed."""
-    import numpy as np
-
-    with np.errstate(over="ignore"):  # wrapping is the point of splitmix64
-        x = np.asarray(keys, dtype=np.uint64) + np.uint64(0x9E3779B97F4A7C15)
-        x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        x = x ^ (x >> np.uint64(31))
-        h1 = x & np.uint64(0xFFFFFFFF)
-        h2 = (x >> np.uint64(32)) | np.uint64(1)  # odd -> cycles all slots
-        i = np.arange(_BLOOM_HASHES, dtype=np.uint64)
-        return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(_BLOOM_BITS)
-
-
 def _bloom_positions(key: int) -> list[int]:
-    return [int(p) for p in _bloom_positions_vec([int(key)])[0]]
+    return [int(p) for p in bloom_positions([int(key)], _BLOOM_BITS, _BLOOM_HASHES)[0]]
 
 
 def _bloom_build(batches: Iterator[pd.DataFrame]):
@@ -218,7 +201,7 @@ def _bloom_build(batches: Iterator[pd.DataFrame]):
         keys = pdf["c_custkey"].dropna().to_numpy(dtype=np.int64)
         if not len(keys):
             continue
-        pos = _bloom_positions_vec(keys).ravel()
+        pos = bloom_positions(keys, _BLOOM_BITS, _BLOOM_HASHES).ravel()
         np.bitwise_or.at(
             words, (pos // 64).astype(np.int64), np.uint64(1) << (pos % 64)
         )
@@ -273,18 +256,18 @@ def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bloom_positions(keys, n_bits: int, n_hashes: int):
-    """(n, n_hashes) bit positions; same splitmix64 + Kirsch-Mitzenmacher
-    double hashing as `_bloom_positions_vec`, with the geometry as
-    arguments."""
+    """(n, n_hashes) bit positions via splitmix64 + Kirsch-Mitzenmacher
+    double hashing — pure numpy uint64 arithmetic, no per-row Python, so
+    both the build and the map-side probe run at Arrow-batch speed."""
     import numpy as np
 
-    with np.errstate(over="ignore"):
+    with np.errstate(over="ignore"):  # wrapping is the point of splitmix64
         x = np.asarray(keys, dtype=np.uint64) + np.uint64(0x9E3779B97F4A7C15)
         x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
         x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
         x = x ^ (x >> np.uint64(31))
         h1 = x & np.uint64(0xFFFFFFFF)
-        h2 = (x >> np.uint64(32)) | np.uint64(1)
+        h2 = (x >> np.uint64(32)) | np.uint64(1)  # odd -> cycles all slots
         i = np.arange(n_hashes, dtype=np.uint64)
         return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(n_bits)
 

@@ -1,15 +1,14 @@
-"""Skew-mitigation helpers: salted aggregation and salted broadcast-side
-replication (docs/SCALE.md, Aggregations/Joins).
+"""Skew-mitigation helpers: salted aggregation (docs/SCALE.md,
+Aggregations).
 
 AQE's skew-join splitting covers sort-merge joins automatically; these
-helpers cover the two cases it doesn't: skewed *aggregation* keys, and
-hash joins where one key dominates. Salting is deterministic here
-(``pmod(hash(...), n)``) so results are reproducible.
+helpers cover a case it doesn't: skewed *aggregation* keys. Salting is
+deterministic here (``pmod(hash(...), n)``) so results are reproducible.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .._registry import Registry
@@ -135,29 +134,6 @@ def auto_salted_aggregate(
     partial = df.withColumn("_salt", salt).groupBy(key_col, "_salt").agg(*first_aggs())
     final = [remerge[fn](out).alias(out) for out, fn in agg_exprs.items()]
     return partial.groupBy(key_col).agg(*final)
-
-
-def salted_broadcast_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Join a skewed large side against a small side by replicating the
-    small side ``n_salts`` times and salting the large side's key — every
-    hot key spreads over ``n_salts`` partitions instead of one straggler.
-
-    The small side must be broadcastable (it is replicated n_salts×).
-    """
-    salted_large = skewed.withColumn(
-        "_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(n_salts))
-    )
-    replicated_small = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = salted_large.join(F.broadcast(replicated_small), [key, "_salt"], how)
-    return out.drop("_salt")
 
 
 _AUTO_SALT_ORACLE = """

@@ -1606,37 +1606,6 @@ def lang_id_trained_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lang_nb_score(docs, artifacts, mode="word")
 
 
-def lang_nb_save(spark: SparkSession, artifacts, path: str) -> None:
-    """Persist trained NB artifacts as parquet — the durable form of the
-    session memo (same lifecycle as the stored ANN indexes): the V×L
-    count frame under ``model/``, the L-row constants (per-lang totals,
-    doc counts) + vocab size under ``constants/``. Overwrite-idempotent."""
-    model, v, tot, n_docs = artifacts
-    model.write.mode("overwrite").parquet(f"{path}/model")
-    rows = [
-        (lang, int(tot[lang]), int(n_docs.get(lang, 0)), int(v))
-        for lang in sorted(tot)
-    ]
-    spark.createDataFrame(
-        rows, "lang string, n long, n_docs long, v long"
-    ).write.mode("overwrite").parquet(f"{path}/constants")
-
-
-def lang_nb_load(spark: SparkSession, path: str):
-    """Load artifacts saved by `lang_nb_save`; the returned tuple is
-    drop-in for `lang_nb_score` (scoring with loaded artifacts must
-    reproduce scoring with the trained ones exactly — asserted in
-    tests/test_lm.py)."""
-    model = spark.read.parquet(f"{path}/model")
-    const = spark.read.parquet(f"{path}/constants").collect()
-    if not const:
-        return model, 0, {}, {}
-    v = int(const[0]["v"])
-    tot = {r["lang"]: int(r["n"]) for r in const}
-    n_docs = {r["lang"]: int(r["n_docs"]) for r in const}
-    return model, v, tot, n_docs
-
-
 _QC_THRESH = 300  # weak-label boundary: n_chars >= this => 'good'
 
 _QUALITY_NB_ORACLE = f"""

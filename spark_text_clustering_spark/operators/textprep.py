@@ -772,21 +772,6 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bpe_save_merges(merges_df: DataFrame, path: str) -> None:
-    """Persist a learned BPE merge table (step, left, right, pair_count)
-    as parquet — the artifact a tokenizer ships; overwrite-idempotent."""
-    merges_df.write.mode("overwrite").parquet(path)
-
-
-def bpe_load_merges(spark: SparkSession, path: str) -> list[tuple[str, str]]:
-    """Load a merge table back in training order, ready for
-    `bpe_apply_merges` — encoding with the loaded table must reproduce
-    encoding with the in-session table exactly (asserted in
-    tests/test_lm.py)."""
-    rows = spark.read.parquet(path).orderBy("step").collect()
-    return [(r["left"], r["right"]) for r in rows]
-
-
 # ---------------------------------------------------------------------------
 # WordPiece (round 10) — completes the tokenizer-training trio: BPE
 # (frequency-scored merges, GPT-family), unigram-LM (EM pruning,
@@ -1066,21 +1051,3 @@ def wordpiece_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cnt"), F.asc("token"))
         .limit(50)
     )
-
-
-def wordpiece_save_vocab(
-    spark: SparkSession, vocab: set[str], path: str
-) -> None:
-    """Persist a learned WordPiece vocabulary as parquet — the artifact a
-    BERT-family tokenizer ships (cf. `bpe_save_merges`, the unigram piece
-    table); overwrite-idempotent."""
-    spark.createDataFrame(
-        [(s,) for s in sorted(vocab)], "piece string"
-    ).write.mode("overwrite").parquet(path)
-
-
-def wordpiece_load_vocab(spark: SparkSession, path: str) -> set[str]:
-    """Load a WordPiece vocabulary back; encoding with the loaded vocab
-    must reproduce encoding with the in-session one exactly (asserted in
-    tests/test_wordpiece.py)."""
-    return {r["piece"] for r in spark.read.parquet(path).collect()}

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .._registry import Registry
-from ..catalog import load_table
+from ..catalog import load_table, shuffle_grain
 
 REG = Registry()
 
@@ -222,12 +222,8 @@ def unigram_train(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     # plenty, and 32-partition shuffles would be pure task-setup overhead
     # across the iteration's many tiny stages (cf. the demo-sizing notes
     # in heavy_hitters / incremental_dedup_minhash)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with shuffle_grain(spark, 4):
         return _unigram_train_inner(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _unigram_train_inner(spark: SparkSession, sf_dir: str) -> dict[str, float]:
@@ -314,21 +310,3 @@ def unigram_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cnt"), F.asc("piece"))
         .limit(50)
     )
-
-
-def unigram_save_pieces(spark: SparkSession, logp: dict[str, float], path: str) -> None:
-    """Persist the learned piece table as parquet (the tokenizer
-    artifact; overwrite-idempotent, cf. bpe_save_merges)."""
-    rows = [(p, float(lp)) for p, lp in sorted(logp.items())]
-    spark.createDataFrame(rows, "piece string, logprob double").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def unigram_load_pieces(spark: SparkSession, path: str) -> dict[str, float]:
-    """Load a piece table saved by `unigram_save_pieces`; segmenting with
-    the loaded model must reproduce the in-session model exactly."""
-    return {
-        r["piece"]: float(r["logprob"])
-        for r in spark.read.parquet(path).collect()
-    }

@@ -9,9 +9,8 @@ no string munging, no wildcard collisions.
 
 Scale: ``wholetext`` makes one row per file (the unit the NLP pipeline
 needs). Each task reads whole files, so partition count tracks file count;
-for millions of small files at 100 TB, compact to parquet first (this
-module's ``corpus_to_parquet``) — the testdata ``documents`` table is
-exactly that compacted form.
+for millions of small files at 100 TB, compact to parquet first — the
+testdata ``documents`` table is exactly that compacted form.
 """
 
 from __future__ import annotations
@@ -60,15 +59,3 @@ def read_stopwords_cached(spark: SparkSession, path: str) -> list[str]:
     if key not in _STOPWORD_MEMO:
         _STOPWORD_MEMO[key] = read_stopwords(spark, path)
     return _STOPWORD_MEMO[key]
-
-
-def corpus_to_parquet(corpus: DataFrame, out_path: str) -> None:
-    """Compact a whole-file corpus to parquet (doc_id via deterministic
-    path-ordered ids — reference R1 ``zipWithIndex`` is partition-order
-    dependent; a window over path is reproducible)."""
-    from pyspark.sql import Window
-
-    with_id = corpus.withColumn(
-        "doc_id", F.row_number().over(Window.orderBy("path")).cast("long") - 1
-    )
-    with_id.select("doc_id", "path", "text").write.mode("overwrite").parquet(out_path)

@@ -15,8 +15,6 @@ def await_drain(q, timeout_sec: int, what: str = "stream") -> None:
         raise TimeoutError(f"{what} did not drain within {timeout_sec}s")
 
 
-from contextlib import contextmanager
-
 # One staged source directory per (applicationId, tag) — the registered
 # streaming demos simulate file-by-file arrival by landing a bounded
 # table slice as N single-file parquet "arrivals" (an approxQuantile cut
@@ -52,28 +50,3 @@ def staged_source(spark, tag: str, build_fn) -> str:
         return ""
     _STAGED_SRC_MEMO[key] = src
     return src
-
-
-@contextmanager
-def state_grain(spark, n_partitions: int):
-    """Pin ``spark.sql.shuffle.partitions`` to a state-key-matched grain
-    for the duration of a streaming replay (round 14).
-
-    The stateful operators here key on a handful of groups (3-4 tumbling
-    windows, a bounded user slice), but the state store, its per-batch
-    commit, and the Arrow/Python state workers are all instantiated PER
-    SHUFFLE PARTITION PER MICROBATCH — at the relational default (32)
-    that is ~10x more state machinery than state keys, pure overhead
-    (measured: heavy-hitters replay 17.7 -> 12.0 s cold / 9.9 -> 8.7
-    warm at grain 8; EWMA 13.0 -> 10.6 / 7.8 -> 7.2). At scale the same
-    rule applies upward: size state partitions to key cardinality and
-    state-store volume, not to the batch shuffle default. The conf is
-    captured by the query at start(); restored on exit either way.
-    Partition count never affects results — only placement."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n_partitions))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .._registry import Registry
-from ..catalog import load_table
+from ..catalog import load_table, shuffle_grain
 from ..operators.analytics import _PSI_BINS, _PSI_CUR, _PSI_REF, psi_from_binned
 from ..operators.analytics import _PSI_ORACLE
 from ._util import await_drain, staged_source
@@ -150,11 +150,8 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         if src:
             # <= 11 bin groups per epoch: 32 shuffle partitions is pure
-            # task-setup overhead (the round-7 streaming-demo lesson);
-            # restore in finally
-            prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            try:
+            # task-setup overhead (the round-7 streaming-demo lesson)
+            with shuffle_grain(spark, 4):
                 streaming_drift_psi(spark, src, store, ckpt, mn, mx)
                 merged = (
                     spark.read.parquet(store)
@@ -166,8 +163,6 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (r["bin"], int(r["cu"]))
                     for r in merged.where(F.col("bin").isNotNull()).collect()
                 ]
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         else:  # empty current slice: nothing streamed, all-zero counts
             n_cur = 0
             cu_rows = []

@@ -44,10 +44,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .._registry import Registry
-from ..catalog import load_table
+from ..catalog import load_table, shuffle_grain
 from ..operators.analytics import _EWMA_ALPHA
 from ..session import ensure_utc
-from ._util import await_drain, staged_source, state_grain
+from ._util import await_drain, staged_source
 
 REG = Registry()
 
@@ -108,7 +108,7 @@ def streaming_ewma(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     # bounded user slice — state grain sized to keys, not the batch default
-    with state_grain(spark, 8):
+    with shuffle_grain(spark, 8):
         q = (
             out.writeStream.foreachBatch(_commit)
             .outputMode("update")  # required by the Update-mode stateful op
@@ -174,9 +174,7 @@ def stream_ewma_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # per-epoch groups are user-count-sized; 32 shuffle partitions
         # would be pure task-setup overhead (round-7 streaming lesson)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
+        with shuffle_grain(spark, 4):
             streaming_ewma(spark, src, store, ckpt)
             merged = spark.read.parquet(store).select(
                 "event_id", F.round("ewma", 6).alias("ewma")
@@ -184,7 +182,5 @@ def stream_ewma_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             # sever every plan reference to the temp store before the
             # finally deletes it (event-count-sized, executor-resident)
             return merged.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     finally:
         shutil.rmtree(base, ignore_errors=True)

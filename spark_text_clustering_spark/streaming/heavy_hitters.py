@@ -57,9 +57,9 @@ from pyspark.sql.types import (
 )
 
 from .._registry import Registry
-from ..catalog import load_table
+from ..catalog import load_table, shuffle_grain
 from ..session import ensure_utc
-from ._util import await_drain, staged_source, state_grain
+from ._util import await_drain, staged_source
 
 REG = Registry()
 
@@ -222,8 +222,8 @@ def heavy_hitters_window_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    # state keys are windows — a handful; see state_grain
-    with state_grain(spark, 8):
+    # state keys are windows — a handful
+    with shuffle_grain(spark, 8):
         q = (
             cand.writeStream.format("memory")
             .queryName(table_name)
@@ -300,69 +300,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heavy_hitters_window_batch(events, window_seconds=86400, support=0.01)
 
 
-def heavy_hitters_sliding_stream(
-    spark: SparkSession,
-    src_dir: str,
-    window_seconds: int = 172800,
-    slide_seconds: int = 86400,
-    support: float = 0.01,
-    delay_seconds: int = 60,
-    table_name: str = "hh_slide_out",
-) -> DataFrame:
-    """Sliding-window variant (round 5): each event joins window_seconds /
-    slide_seconds OVERLAPPING windows (Spark's ``F.window(ts, len, slide)``
-    expands the assignment rows), and the SAME per-window CMS+MG fold runs
-    — state is one row per OPEN window, so overlap multiplies the open-
-    window count by len/slide, not by the key cardinality; the timeout
-    still fires at window_start + len. Exact verify over the archive with
-    the identical expansion."""
-    ensure_utc(spark)
-    capacity = max(1, math.ceil(1.0 / support))
-    win = F.window(
-        "ts", f"{window_seconds} seconds", f"{slide_seconds} seconds"
-    )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .withWatermark("ts", f"{delay_seconds} seconds")
-        .select("user_id", "ts", win.start.alias("window_start"))
-    )
-    cand = stream.groupBy("window_start").applyInPandasWithState(
-        _make_hh_fold(window_seconds, support, capacity),
-        outputStructType=CAND_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    # state keys are windows — a handful; see state_grain
-    with state_grain(spark, 8):
-        q = (
-            cand.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drain(q, 180, "heavy-hitters stream")
-    candidates = spark.table(table_name).select("window_start", "user_id")
-
-    archive = (
-        spark.read.schema("user_id long, ts timestamp")
-        .parquet(src_dir)
-        .select("user_id", "ts", win.start.alias("window_start"))
-    )
-    totals = archive.groupBy("window_start").agg(F.count(F.lit(1)).alias("total"))
-    exact = (
-        archive.join(F.broadcast(candidates), ["window_start", "user_id"], "leftsemi")
-        .groupBy("window_start", "user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return exact.join(totals, "window_start").where(
-        F.col("cnt") >= F.ceil(F.lit(support) * F.col("total"))
-    ).select("window_start", "user_id", "cnt")
-
-
 def heavy_hitters_sliding_batch(
     events: DataFrame,
     window_seconds: int = 172800,
@@ -407,9 +344,7 @@ def stream_heavy_hitters_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch mode of the SLIDING-window heavy-hitters transform (2-day
     windows sliding 1 day, support 1%) — each event counts in two
     overlapping windows; the DuckDB oracle replays the epoch-aligned
-    assignment with an explicit offset unnest. The true stateful run is
-    ``heavy_hitters_sliding_stream`` above, batch-equivalence-asserted in
-    tests/test_stateful.py."""
+    assignment with an explicit offset unnest."""
     ensure_utc(spark)
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
     return heavy_hitters_sliding_batch(
@@ -532,9 +467,7 @@ def heavy_hitters_window_stream_demo(spark: SparkSession, sf_dir: str) -> DataFr
     # the demo has ~30 window groups, so 32 partitions is pure state
     # setup overhead (measured: 16 s -> 9 s replay at 4). A real
     # deployment sizes this to key cardinality the same way.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with shuffle_grain(spark, 4):
         out = heavy_hitters_window_stream(
             spark, src, window_seconds=86400, support=_HH_STREAM_SUPPORT,
             delay_seconds=60, table_name="hh_demo_out",
@@ -543,8 +476,6 @@ def heavy_hitters_window_stream_demo(spark: SparkSession, sf_dir: str) -> DataFr
             (r["window_start"], r["user_id"], r["cnt"])
             for r in out.collect()
         ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # the result is heavy-hitter-bounded BY CONSTRUCTION (at most
     # support^-1 rows per fired window), so collecting it is
     # model-sized, and rebuilding the frame from the collected rows

@@ -90,9 +90,18 @@ def streaming_ingest_dedup(
     # batch partition with sig = NULL (round-7 ADVICE fix made them
     # durable; round 15 folded their separate unsigned/ sub-store into
     # the signatures write — one commit job per epoch instead of two)
-    return spark.read.parquet(f"{store_path}/signatures").select(
+    survivors = spark.read.parquet(f"{store_path}/signatures").select(
         "doc_id", "batch_id"
     )
+    # a store written before the fused commit still holds its short-doc
+    # survivors in unsigned/batch_id=<bid>/ (doc ids only): read them too,
+    # so an upgraded store does not lose them
+    legacy = os.path.join(store_path, "unsigned")
+    if os.path.isdir(legacy):
+        survivors = survivors.unionByName(
+            spark.read.parquet(legacy).select("doc_id", "batch_id")
+        )
+    return survivors
 
 
 from pyspark.sql import functions as F  # noqa: E402

@@ -155,117 +155,3 @@ def _wire_shared_oracle() -> None:
 
 
 _wire_shared_oracle()
-
-
-def serve_lda_topics_stream(
-    spark: SparkSession,
-    src_dir: str,
-    sf_train_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    *,
-    k: int = 5,
-    max_iter: int = 10,
-    timeout_sec: int = 300,
-) -> DataFrame:
-    """The reference's OWN serving path, on a stream: train the
-    vectorizer + LDA once in batch (frozen CountVectorizerModel / IDF /
-    LDA model — all per-doc deterministic transforms), then topic-score
-    each arriving microbatch in ``foreachBatch`` with ONE
-    ``model.transform`` (the rebuild of LDALoader's per-book loop) and
-    append (doc_id, topic_dist, main_topic) to parquet. Every stage is a
-    frozen per-row transform, so batching cannot change an assignment:
-    streamed main topics are identical to batch and the distributions
-    agree to variational-inference tolerance (LDAModel.transform uses a
-    randomized gamma init; ~1e-5 observed) — asserted in
-    tests/test_streaming_ingest_dedup.py."""
-    import numpy as np
-
-    from ..catalog import load_table
-    from ..ml.lda import score_documents, train_lda
-    from ..ml.vectorize import _preprocess, apply_idf_floor, vectorize
-
-    train_docs = load_table(spark, sf_train_dir, "documents")
-    vec, pipeline_model = vectorize(train_docs, vocab_size=50_000, min_doc_freq=2)
-    corpus = vec.select("doc_id", "tfidf")
-    lda_model = train_lda(corpus, k=k, max_iter=max_iter, optimizer="em", seed=42)
-    idf_values = np.asarray(pipeline_model.stages[-1].idf.toArray())
-
-    def _score_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        cleaned = _preprocess(batch_df, False)
-        feat = pipeline_model.transform(cleaned).where(F.size("tokens") > 0)
-        feat = apply_idf_floor(feat, idf_values).select("doc_id", "tfidf")
-        # per-epoch partition overwrite: a replayed (at-least-once) epoch
-        # replaces rather than double-appends its scores (round-7 fix)
-        score_documents(lda_model, feat).write.mode("overwrite").parquet(
-            f"{out_dir}/epoch={int(epoch_id)}"
-        )
-
-    stream = (
-        spark.readStream.schema(SCHEMAS["documents"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_score_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"LDA serving stream did not drain within {timeout_sec}s"
-        )
-    return spark.read.parquet(out_dir).drop("epoch")
-
-
-def serve_lang_id_stream_from_artifacts(
-    spark: SparkSession,
-    src_dir: str,
-    model_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    *,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 300,
-) -> DataFrame:
-    """The stored-artifact twin of ``serve_lang_id_stream`` (round 7):
-    scoring artifacts come from the DURABLE parquet model written by
-    ``lang_nb_save`` — no training in this session at all. This is the
-    production restart story: the serving job can die, the cluster can
-    be replaced, and a fresh session resumes scoring from (model_path,
-    checkpoint_dir) alone, with the same per-epoch overwrite commit
-    making crash replays idempotent. Artifact-loaded scoring is
-    asserted row-identical to trained-artifact scoring in
-    tests/test_lm.py; the streamed composition is asserted equal to the
-    batch predictions in tests/test_streaming_ingest_dedup.py."""
-    from ..operators.text import lang_nb_load, lang_nb_score
-
-    artifacts = lang_nb_load(spark, model_path)
-
-    def _score_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        docs = batch_df.where(F.col("doc_id").isNotNull()).select(
-            "doc_id", "lang", F.lower("text").alias("t")
-        )
-        lang_nb_score(docs, artifacts).write.mode("overwrite").parquet(
-            f"{out_dir}/epoch={int(epoch_id)}"
-        )
-
-    stream = (
-        spark.readStream.schema(SCHEMAS["documents"])
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_score_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"artifact serving stream did not drain within {timeout_sec}s"
-        )
-    return spark.read.parquet(out_dir).drop("epoch")

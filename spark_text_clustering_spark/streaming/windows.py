@@ -123,33 +123,6 @@ def run_stream_available_now(
         shutil.rmtree(src_dir, ignore_errors=True)
 
 
-def streaming_dedup(spark: SparkSession, sf_dir: str, table_name: str = "dedup_out") -> DataFrame:
-    """Stateful streaming dedup on event_id within the watermark
-    (``dropDuplicatesWithinWatermark`` — state-store-backed)."""
-    ensure_utc(spark)
-    src_dir = tempfile.mkdtemp(prefix="stream_dedup_")
-    try:
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src_dir, "a.parquet"))
-        # second copy = guaranteed duplicates arriving "later"
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src_dir, "b.parquet"))
-        stream = (
-            stream_events(spark, src_dir)
-            .withWatermark("ts", "2 days")
-            .dropDuplicatesWithinWatermark(["event_id"])
-        )
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drain(query, 120, "windowed-agg stream")
-        return spark.table(table_name)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-
-
 def clicks_to_purchases_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Shared transform for the stream-stream interval join: purchases
     within 1h after a click by the same user (the streaming twin of the

@@ -30,68 +30,6 @@ def test_pagerank_deterministic(spark):
     assert a == b
 
 
-def test_convergence_loop_matches_unrolled_at_three_iters(spark):
-    """The production loop frozen at 3 iterations must reproduce the
-    registered (oracled) key exactly — same join+agg per round."""
-    from pyspark.sql import functions as F
-
-    from spark_text_clustering_spark.catalog import load_table
-    from spark_text_clustering_spark.operators.graph import (
-        pagerank_until_convergence,
-    )
-
-    orders = load_table(spark, SF_SMALL, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_partkey")
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    fwd = pairs.select((F.col("c") * 2).alias("src"), (F.col("p") * 2 + 1).alias("dst"))
-    rev = pairs.select((F.col("p") * 2 + 1).alias("src"), (F.col("c") * 2).alias("dst"))
-    edges = fwd.unionAll(rev)
-    ranks, it, delta = pagerank_until_convergence(
-        spark, edges, tol=0.0, max_iter=3
-    )
-    got = {
-        r["id"]: round(r["pr"] * ranks.count(), 6) for r in ranks.collect()
-    }
-    want = {
-        r["node_id"]: r["pr_scaled"]
-        for r in graph_pagerank(spark, SF_SMALL).collect()
-    }
-    assert it == 3
-    assert got == want
-
-
-def test_convergence_loop_reaches_fixpoint(spark):
-    from pyspark.sql import functions as F
-
-    from spark_text_clustering_spark.catalog import load_table
-    from spark_text_clustering_spark.operators.graph import (
-        pagerank_until_convergence,
-    )
-
-    orders = load_table(spark, SF_SMALL, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_partkey")
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    edges = pairs.select((F.col("c") * 2).alias("src"), (F.col("p") * 2 + 1).alias("dst")).unionAll(
-        pairs.select((F.col("p") * 2 + 1).alias("src"), (F.col("c") * 2).alias("dst"))
-    )
-    # the damped walk contracts at ~0.85^t: tol 2e-3 lands near t=33,
-    # safely inside the cap (1e-4 would need ~52 iterations)
-    ranks, it, delta = pagerank_until_convergence(spark, edges, tol=2e-3, max_iter=40)
-    assert delta <= 2e-3
-    assert it < 40  # converged before the cap, not cut off by it
-    # mass conserved at the fixpoint
-    total = ranks.agg(F.sum("pr")).collect()[0][0]
-    assert abs(total - 1.0) < 1e-6
-
-
 def test_label_propagation_invariants(spark):
     """Exact values are pinned by the oracle; these pin the structure:
     every node gets exactly one community, every community label is a
@@ -226,96 +164,6 @@ def test_link_prediction_scores_only_new_links(spark):
         assert (r["part_a"], r["part_b"]) not in edges
         assert r["common_cnt"] >= 2
         assert 0 < r["jaccard"] <= 1
-
-
-def test_lpa_loop_matches_unrolled_at_three_iters(spark):
-    """The production loop capped at 3 iterations must reproduce the
-    registered (oracled) key exactly — same join/count/top-1 body."""
-    from spark_text_clustering_spark.operators.graph import (
-        _copurchase_edges,
-        graph_label_propagation,
-        label_propagation_until_stable,
-    )
-
-    edges = _copurchase_edges(spark, SF_SMALL)
-    labels, it, changed = label_propagation_until_stable(
-        spark, edges, max_iter=3
-    )
-    got = {r["id"]: r["label"] for r in labels.collect()}
-    want = {
-        r["node_id"]: r["community"]
-        for r in graph_label_propagation(spark, SF_SMALL).collect()
-    }
-    assert it == 3
-    assert got == want
-
-
-def test_kcore_loop_reaches_true_fixpoint(spark):
-    """The production peel must land on the exact k-core: equal to the
-    pure-Python fixpoint, and one further Python peel is a no-op."""
-    from collections import Counter
-
-    from spark_text_clustering_spark.operators.graph import (
-        _KCORE_K,
-        _copurchase_edges,
-        kcore_until_fixpoint,
-    )
-
-    raw = [
-        (r["src"], r["dst"]) for r in _copurchase_edges(spark, SF_SMALL).collect()
-    ]
-    edges = raw
-    while True:
-        deg = Counter(s for s, _ in edges)
-        keep = {n for n, d in deg.items() if d >= _KCORE_K}
-        nxt = [(s, d) for s, d in edges if s in keep and d in keep]
-        if len(nxt) == len(edges):
-            break
-        edges = nxt
-    want = dict(Counter(s for s, _ in edges))
-    out, rounds = kcore_until_fixpoint(
-        spark, _copurchase_edges(spark, SF_SMALL), _KCORE_K
-    )
-    got = {r["node_id"]: r["degree"] for r in out.collect()}
-    assert got == want
-    assert rounds < 50  # converged, not cut off
-
-
-def test_ppr_frontier_loop_matches_unrolled_at_three_iters(spark):
-    """The frontier-filtered production loop frozen at 3 iterations
-    must reproduce the registered key exactly on its nonzero support
-    (dropping exact-zero rows is lossless: teleport touches only
-    seeds, mass only flows along edges)."""
-    from pyspark.sql import functions as F
-
-    from spark_text_clustering_spark.operators.graph import (
-        _PPR_SEED_MOD,
-        _copurchase_edges,
-        graph_pagerank_personalized,
-        personalized_pagerank_until_convergence,
-    )
-
-    edges = _copurchase_edges(spark, SF_SMALL)
-    seeds = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .where((F.col("id") % _PPR_SEED_MOD) == 0)
-    )
-    ns = seeds.count()
-    ranks, it, delta = personalized_pagerank_until_convergence(
-        spark, edges, seeds, tol=0.0, max_iter=3
-    )
-    got = {r["id"]: round(r["pr"] * ns, 6) for r in ranks.collect()}
-    want = {
-        r["node_id"]: r["ppr_scaled"]
-        for r in graph_pagerank_personalized(spark, SF_SMALL).collect()
-        if r["ppr_scaled"] > 0
-    }
-    assert it == 3
-    assert got == want
-    # and the frontier is genuinely sparse vs the node universe
-    n_nodes = edges.select("src").distinct().count()
-    assert 0 < len(got) <= n_nodes
 
 
 def test_connected_components_match_union_find(spark):

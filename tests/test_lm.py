@@ -230,73 +230,6 @@ def test_lang_id_trained_beats_heuristic(spark):
     assert acc_w >= 0.43, acc_w  # pinned floor at sf0.01
 
 
-def test_model_artifacts_roundtrip(spark, tmp_path):
-    """Round-6 durable-artifact completion: every trained object must
-    survive a parquet save/load with EXACT behavioral equality — the NB
-    language models (char + word) score identically from loaded
-    artifacts, and BPE encoding from a loaded merge table matches the
-    in-session table token for token."""
-    from pyspark.sql import functions as F
-
-    from spark_text_clustering_spark.operators.text import (
-        _lang_nb_docs,
-        lang_nb_load,
-        lang_nb_save,
-        lang_nb_score,
-        lang_nb_train,
-    )
-
-    from .conftest import SF_ORACLE
-
-    docs = _lang_nb_docs(spark, SF_ORACLE)
-    for mode in ("char", "word"):
-        trained = lang_nb_train(spark, SF_ORACLE, mode=mode)
-        path = str(tmp_path / f"nb_{mode}")
-        lang_nb_save(spark, trained, path)
-        loaded = lang_nb_load(spark, path)
-        a = {
-            (r["doc_id"], r["predicted_lang"])
-            for r in lang_nb_score(docs, trained, mode=mode).collect()
-        }
-        b = {
-            (r["doc_id"], r["predicted_lang"])
-            for r in lang_nb_score(docs, loaded, mode=mode).collect()
-        }
-        assert a == b and len(a) > 0
-
-    from spark_text_clustering_spark.operators.textprep import (
-        bpe_apply_merges,
-        bpe_load_merges,
-        bpe_save_merges,
-        bpe_train_merges,
-    )
-
-    merges_df = bpe_train_merges(spark, SF_ORACLE, n_merges=5)
-    in_session = [
-        (r["left"], r["right"]) for r in merges_df.orderBy("step").collect()
-    ]
-    path = str(tmp_path / "bpe_merges")
-    bpe_save_merges(merges_df, path)
-    loaded = bpe_load_merges(spark, path)
-    assert loaded == in_session and len(loaded) == 5
-
-    words = (
-        spark.createDataFrame(
-            [("lowering",), ("lowest",), ("newer",)], "word string"
-        )
-        .withColumn("freq", F.lit(1))
-    )
-    enc_a = {
-        r["word"]: r["tokens"]
-        for r in bpe_apply_merges(words, in_session).collect()
-    }
-    enc_b = {
-        r["word"]: r["tokens"]
-        for r in bpe_apply_merges(words, loaded).collect()
-    }
-    assert enc_a == enc_b
-
-
 def test_unigram_expected_counts_closed_form():
     """Hand-verified lattice math: vocab {a:.25, b:.25, ab:.5}, word
     'ab'. Segmentations: [a,b] p=.0625, [ab] p=.5, total .5625 —
@@ -381,25 +314,6 @@ def test_unigram_encode_matches_python_reference(spark):
         for r in QUERIES["unigram_encode_corpus"](spark, SF_SMALL).collect()
     ]
     assert got == want
-
-
-def test_unigram_pieces_save_load_roundtrip(spark, tmp_path):
-    from spark_text_clustering_spark.operators.unigram import (
-        unigram_load_pieces,
-        unigram_save_pieces,
-        unigram_train,
-        viterbi_segment,
-    )
-
-    from .conftest import SF_SMALL
-
-    logp = unigram_train(spark, SF_SMALL)
-    path = str(tmp_path / "unigram_pieces")
-    unigram_save_pieces(spark, logp, path)
-    loaded = unigram_load_pieces(spark, path)
-    assert loaded == logp
-    for w in ("window", "stream", "aggregate"):
-        assert viterbi_segment(w, loaded) == viterbi_segment(w, logp)
 
 
 def test_quality_classifier_learns_above_majority_baseline(spark):

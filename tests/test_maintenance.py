@@ -1,111 +1,7 @@
-"""Storage maintenance: compaction must preserve data and hit the target
-file count; Z-ordered writes must produce parquet footers that actually
-admit file-level skipping on BOTH clustered dimensions."""
-
-import os
+"""Clustered-layout keys: the Hilbert sort key must beat the Morton key
+on file-level skipping."""
 
 from pyspark.sql import functions as F
-
-from spark_text_clustering_spark.catalog import load_table
-from spark_text_clustering_spark.operators.maintenance import (
-    compact_small_files,
-    write_zordered,
-    zorder_file_stats,
-)
-
-from .conftest import SF_SMALL
-
-
-def _parquet_files(path):
-    out = []
-    for root, _dirs, files in os.walk(path):
-        out += [os.path.join(root, f) for f in files if f.endswith(".parquet")]
-    return out
-
-
-def test_compact_small_files_preserves_data(spark, tmp_path):
-    src = str(tmp_path / "frag")
-    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-    docs.repartition(37).write.parquet(src)  # fragmented: 37 small files
-    assert len(_parquet_files(src)) == 37
-    before = sorted(r["doc_id"] for r in spark.read.parquet(src).collect())
-
-    _, n_files = compact_small_files(spark, src, target_file_bytes=1 << 40)
-    assert n_files == 1
-    assert len(_parquet_files(src)) == 1
-    after = sorted(r["doc_id"] for r in spark.read.parquet(src).collect())
-    assert after == before
-    # staging/old dirs cleaned up
-    assert not os.path.exists(src + ".compact_staging")
-    assert not os.path.exists(src + ".compact_old")
-
-
-def test_compact_respects_target_size(spark, tmp_path):
-    src = str(tmp_path / "frag2")
-    load_table(spark, SF_SMALL, "documents").repartition(16).write.parquet(src)
-    total = sum(os.path.getsize(f) for f in _parquet_files(src))
-    target = max(1, total // 4)
-    _, n_files = compact_small_files(spark, src, target_file_bytes=target)
-    assert 4 <= n_files <= 5  # ceil(total/target): rounding headroom
-    assert len(_parquet_files(src)) == n_files
-
-
-def test_compact_preserves_evolved_schema(spark, tmp_path):
-    """Compacting a directory whose files were written under EVOLVING
-    schemas (a later writer added a column) must keep the union of
-    columns with nulls back-filled — a naive spark.read.parquet picks one
-    footer's schema and silently drops the new column."""
-    src = str(tmp_path / "evolved")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "doc_id long, text string"
-    ).write.parquet(src)
-    spark.createDataFrame(
-        [(3, "c", "en")], "doc_id long, text string, lang string"
-    ).write.mode("append").parquet(src)
-
-    compact_small_files(spark, src, target_file_bytes=1 << 40)
-    out = spark.read.parquet(src)
-    assert set(out.columns) == {"doc_id", "text", "lang"}
-    rows = {r["doc_id"]: (r["text"], r["lang"]) for r in out.collect()}
-    assert rows == {1: ("a", None), 2: ("b", None), 3: ("c", "en")}
-
-
-def test_write_zordered_files_admit_skipping(spark, tmp_path):
-    """After a Z-ordered write, per-file zkey [min,max] spans must be
-    (a) non-overlapping across files (range partitioning) and (b) narrow
-    enough that a conjunctive x+y range predicate skips most files —
-    the property a single-column sort cannot give both dimensions."""
-    from spark_text_clustering_spark.operators.traindata import _spread16
-
-    ev = load_table(spark, SF_SMALL, "events").where(
-        F.col("ts").isNotNull() & F.col("user_id").isNotNull()
-    )
-    x = F.col("user_id").bitwiseAND(F.lit(0xFFFF)).cast("long")
-    y = F.floor(F.unix_timestamp("ts") / 60).cast("long").bitwiseAND(F.lit(0xFFFF))
-    zkey = _spread16(x).bitwiseOR(F.shiftleft(_spread16(y), 1))
-
-    dst = str(tmp_path / "zordered")
-    write_zordered(ev.select("event_id", "user_id", "ts"), dst, zkey, n_files=8)
-
-    spans = zorder_file_stats(dst)
-    assert len(spans) == 8
-    ordered = sorted(spans)
-    for (lo_a, hi_a), (lo_b, _hi_b) in zip(ordered, ordered[1:]):
-        assert hi_a <= lo_b  # contiguous, non-overlapping file ranges
-
-    # skipping evidence: each file's span covers a fraction of the global
-    # zkey range, so a point-ish z-range predicate prunes most files
-    glo = min(lo for lo, _ in spans)
-    ghi = max(hi for _, hi in spans)
-    probe_lo = glo + (ghi - glo) // 2
-    probe_hi = probe_lo + (ghi - glo) // 16
-    overlapping = [
-        (lo, hi) for lo, hi in spans if not (hi < probe_lo or lo > probe_hi)
-    ]
-    assert len(overlapping) <= 3  # >= 5 of 8 files skipped
-
-    # and the data survives intact
-    assert spark.read.parquet(dst).count() == ev.count()
 
 
 def test_hilbert_vs_morton_locality(spark):

@@ -270,16 +270,3 @@ def test_lda_online_minibatch_fraction(spark, mini):
     one = df.limit(1).select("doc_id", "tfidf")
     m1 = train_lda(one, k=2, max_iter=1, optimizer="online", seed=1, corpus_size=1)
     assert m1.getSubsamplingRate() == 1.0
-
-
-def test_sql_registered_udfs(spark):
-    """stem()/lemma() usable from pure SQL after registration."""
-    from spark_text_clustering_spark.functions.textnorm import register_sql_udfs
-
-    register_sql_udfs(spark)
-    row = spark.sql(
-        "SELECT stem('dresses') AS s, lemma('cities') AS l, stem(NULL) AS n"
-    ).collect()[0]
-    assert row["s"] == "dress"
-    assert row["l"] == "city"
-    assert row["n"] is None

@@ -129,29 +129,6 @@ def test_percentile_approx_close_to_exact(spark):
         assert abs(r["approx"] - r["exact"]) <= 1.0, tuple(r)
 
 
-def test_corpus_to_parquet_deterministic_ids(spark, tmp_path):
-    """R1 rebuild: path-ordered doc ids are contiguous and reproducible
-    (the reference's zipWithIndex is partition-order dependent)."""
-    from spark_text_clustering_spark.sources.text_corpus import (
-        corpus_to_parquet,
-        read_text_corpus,
-    )
-
-    d = tmp_path / "books"
-    d.mkdir()
-    for name in ["b.txt", "a.txt", "c.txt"]:
-        (d / name).write_text(f"content of {name}")
-    corpus = read_text_corpus(spark, str(d))
-    out = str(tmp_path / "corpus_pq")
-    corpus_to_parquet(corpus, out)
-    back = spark.read.parquet(out).orderBy("doc_id").collect()
-    assert [r["doc_id"] for r in back] == [0, 1, 2]
-    # ids follow lexicographic path order -> a.txt first
-    import os as _os
-
-    assert [_os.path.basename(r["path"]) for r in back] == ["a.txt", "b.txt", "c.txt"]
-
-
 def test_gemm_knn_equals_exact_knn(spark):
     """The BLAS path and the JVM zip_with path must produce identical
     top-k results (same rounding, same tiebreaks)."""

@@ -1,56 +1,14 @@
-"""Sink/source roundtrips (reference S5/S7 rebuilt) + foreachBatch
-streaming sink."""
+"""Sink/source behaviour the engine relies on: the foreachBatch streaming
+sink, schema-evolving and corrupt-record reads, and the sharded
+training-data write layout."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from spark_text_clustering_spark.catalog import SCHEMAS, load_table
-from spark_text_clustering_spark.sources.sinks import (
-    read_csv,
-    write_csv,
-    write_json_report,
-    write_partitioned_parquet,
-)
+from spark_text_clustering_spark.catalog import load_table
 
 from .conftest import SF_SMALL
-
-
-def test_partitioned_parquet_roundtrip_prunes(spark, tmp_path):
-    docs = load_table(spark, SF_SMALL, "documents")
-    out = str(tmp_path / "docs_by_lang")
-    write_partitioned_parquet(docs, out, ["lang"])
-    # partition dirs exist
-    assert any(d.startswith("lang=") for d in os.listdir(out))
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    # partition pruning: filtering one lang reads one partition
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        back.where(F.col("lang") == "en")._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters: [isnotnull(lang" in plan
-
-
-def test_json_report_roundtrip(spark, tmp_path):
-    report = (
-        load_table(spark, SF_SMALL, "documents")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    out = str(tmp_path / "report")
-    write_json_report(report, out)
-    back = spark.read.json(out)
-    assert {(r["lang"], r["n_docs"]) for r in back.collect()} == {
-        (r["lang"], r["n_docs"]) for r in report.collect()
-    }
-
-
-def test_csv_roundtrip_with_schema(spark, tmp_path):
-    nation = load_table(spark, SF_SMALL, "nation")
-    out = str(tmp_path / "nation_csv")
-    write_csv(nation, out)
-    back = read_csv(spark, out, SCHEMAS["nation"])
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
 
 
 def test_foreachbatch_sink(spark, tmp_path):
@@ -85,20 +43,6 @@ def test_foreachbatch_sink(spark, tmp_path):
         assert spark.read.parquet(sink_dir).count() == n_events
     finally:
         shutil.rmtree(src, ignore_errors=True)
-
-
-def test_compact_small_files(spark, tmp_path):
-    from spark_text_clustering_spark.sources.sinks import compact_small_files
-
-    li = load_table(spark, SF_SMALL, "lineitem")
-    frag = str(tmp_path / "fragmented")
-    li.repartition(64).write.mode("overwrite").parquet(frag)  # 64 tiny files
-    compacted = str(tmp_path / "compacted")
-    n_out = compact_small_files(spark, frag, compacted, target_file_mb=128)
-    assert n_out == 1  # ~200KB input -> single ~target file
-    back = spark.read.parquet(compacted)
-    assert back.count() == li.count()
-    assert sorted(back.columns) == sorted(li.columns)
 
 
 def test_schema_evolution_merge_read(spark, tmp_path):
@@ -151,13 +95,12 @@ def test_shard_write_read_pipeline(spark, tmp_path):
         N_SHARDS,
         shard_assign_shuffle,
     )
-    from spark_text_clustering_spark.sources.sinks import write_partitioned_parquet
 
     from .conftest import SF_SMALL
 
     sharded = shard_assign_shuffle(spark, SF_SMALL)
     out = str(tmp_path / "shards")
-    write_partitioned_parquet(sharded, out, ["shard"])
+    sharded.write.mode("overwrite").partitionBy("shard").parquet(out)
 
     back = spark.read.parquet(out)
     assert back.count() == sharded.count()
@@ -168,29 +111,3 @@ def test_shard_write_read_pipeline(spark, tmp_path):
     assert "PartitionFilters" in plan and "shard" in plan.split("PartitionFilters", 1)[1][:200]
     expected = sharded.where(F.col("shard") == 3).count()
     assert one.count() == expected and expected > 0
-
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    """ORC completes the columnar source/sink matrix next to parquet:
-    values round-trip exactly and a filtered re-read reaches the ORC scan
-    as a pushed-down predicate (not a post-scan Filter over full rows)."""
-    from pyspark.sql import functions as F
-
-    from spark_text_clustering_spark.catalog import load_table
-    from spark_text_clustering_spark.sources.sinks import read_orc, write_orc
-
-    from .conftest import SF_SMALL
-
-    src = load_table(spark, SF_SMALL, "nation")
-    path = str(tmp_path / "nation_orc")
-    write_orc(src, path)
-    back = read_orc(spark, path)
-    assert sorted(r["n_name"] for r in back.collect()) == sorted(
-        r["n_name"] for r in src.collect()
-    )
-    filtered = back.where(F.col("n_regionkey") == 2).select("n_name")
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "n_regionkey" in plan.split(
-        "PushedFilters"
-    )[1][:120]
-    assert filtered.count() == src.where("n_regionkey = 2").count()

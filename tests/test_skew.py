@@ -4,10 +4,7 @@ deliberately skewed dataset (one key holding 90% of rows)."""
 import pytest
 from pyspark.sql import functions as F
 
-from spark_text_clustering_spark.operators.skew import (
-    salted_aggregate,
-    salted_broadcast_join,
-)
+from spark_text_clustering_spark.operators.skew import salted_aggregate
 
 
 @pytest.fixture(scope="module")
@@ -33,19 +30,6 @@ def test_salted_aggregate_matches_plain(spark, skewed):
     a = {(r["k"], r["v"], r["n"]) for r in plain.collect()}
     b = {(r["k"], r["v"], r["n"]) for r in salted.collect()}
     assert a == b
-
-
-def test_salted_join_matches_plain(spark, skewed):
-    dim = spark.createDataFrame(
-        [("hot", "H")] + [(f"cold_{i}", f"C{i}") for i in range(100)], "k string, tag string"
-    )
-    plain = skewed.join(dim, "k").groupBy("tag").agg(F.count(F.lit(1)).alias("n"))
-    salted = (
-        salted_broadcast_join(skewed, dim, "k", n_salts=8)
-        .groupBy("tag")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
 
 
 def test_salted_aggregate_rejects_non_mergeable(spark, skewed):

@@ -1,139 +1,6 @@
 """applyInPandasWithState: the custom stateful operator must equal its
 batch twin after full replay (batch-equivalence, SURVEY §5.2.4)."""
 
-import pytest
-
-from spark_text_clustering_spark.catalog import load_table
-from spark_text_clustering_spark.streaming.stateful import (
-    running_user_counters_batch,
-    running_user_counters_stream,
-)
-
-from .conftest import SF_SMALL
-
-
-def test_stateful_counters_match_batch(spark):
-    result = running_user_counters_stream(spark, SF_SMALL, table_name="t_stateful")
-    # update mode may emit one snapshot per trigger; keep the latest per user
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        result.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-    batch = running_user_counters_batch(load_table(spark, SF_SMALL, "events"))
-
-    got = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 6), r["last_ts"])
-        for r in final.collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 6), r["last_ts"])
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-def test_session_timeout_evicts_and_drops_late(spark, tmp_path):
-    """Event-time-timeout sessionization (round 4): sessions are emitted
-    exactly once when the watermark passes last_event + gap, their state
-    rows are evicted (a duplicate emission would mean a timeout re-fired
-    on a lingering state row), a post-eviction event opens a NEW session,
-    and a late row below the watermark is dropped rather than extending
-    an already-finalized session. Batch-equivalence: finalized sessions ==
-    the built-in F.session_window over the on-time events."""
-    import os
-    import time
-    from datetime import datetime, timedelta
-
-    import pandas as pd
-
-    from spark_text_clustering_spark.streaming.stateful import (
-        user_sessions_batch,
-        user_sessions_stream,
-    )
-
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-    S = lambda s: t0 + pd.Timedelta(seconds=s)  # noqa: E731
-    D = lambda s: datetime(2024, 1, 1) + timedelta(seconds=s)  # noqa: E731
-    src = str(tmp_path / "sess_src")
-    os.makedirs(src)
-
-    def write(name, rows, mtime):
-        pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-        # micros, not pandas' default nanos (Spark can't read TIMESTAMP(NANOS))
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        path = os.path.join(src, name)
-        pdf.to_parquet(path)
-        os.utime(path, (mtime, mtime))  # mtime order == microbatch order
-
-    base = time.time()
-    # batch 1: user1 3-event session, user2 1-event session
-    write("f1.parquet", [(1, S(0), 1.0), (1, S(120), 2.0), (1, S(300), 3.0),
-                         (2, S(60), 5.0)], base)
-    # batch 2: user3 session + a LATE user1 row (watermark is t0+240 by
-    # now; t0+150 is below it and must NOT reach user1's session)
-    write("f2.parquet", [(3, S(3600), 7.0), (1, S(150), 100.0)], base + 10)
-    # batch 3: watermark pusher -> fires user1/user2 timeouts
-    write("f3.parquet", [(999, S(7200), 0.0)], base + 20)
-    # batch 4: user2 returns AFTER its first session was evicted -> a NEW
-    # session; plus the next watermark pusher (fires user3's timeout)
-    write("f4.parquet", [(2, S(7300), 9.0), (999, S(36000), 0.0)], base + 30)
-    # batch 5: final flush -> fires the batch-4 session timeouts
-    write("f5.parquet", [(999, S(72000), 0.0)], base + 40)
-
-    out = user_sessions_stream(
-        spark, src, gap_seconds=600, delay_seconds=60, table_name="t_sessions"
-    )
-    got = sorted(tuple(r) for r in out.where("user_id != 999").collect())
-
-    on_time = spark.createDataFrame(
-        [(1, D(0), 1.0), (1, D(120), 2.0), (1, D(300), 3.0), (2, D(60), 5.0),
-         (3, D(3600), 7.0), (2, D(7300), 9.0)],
-        "user_id long, ts timestamp, value double",
-    )
-    want = sorted(tuple(r) for r in user_sessions_batch(on_time, 600).collect())
-    assert got == want  # exactly-once emission AND late-row drop
-    # the late 100.0 value must not have leaked into user1's session
-    u1 = [r for r in got if r[0] == 1]
-    assert len(u1) == 1 and u1[0][3] == 3 and u1[0][4] == 6.0
-    # user2: two distinct sessions (state evicted between them)
-    assert len([r for r in got if r[0] == 2]) == 2
-
-
-def test_transform_with_state_matches_batch(spark):
-    """transformWithStateInPandas (typed-state API) produces the same final
-    per-user snapshot as the batch aggregation."""
-    from spark_text_clustering_spark.streaming.stateful import (
-        running_user_counters_batch,
-        running_user_counters_tws,
-    )
-
-    try:
-        result = running_user_counters_tws(spark, SF_SMALL, table_name="t_tws")
-    except Exception as e:  # pragma: no cover — API availability guard
-        pytest.skip(f"transformWithStateInPandas unavailable: {e}")
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        result.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
-    )
-    batch = running_user_counters_batch(load_table(spark, SF_SMALL, "events"))
-    got = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 6), r["last_ts"])
-        for r in final.collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 6), r["last_ts"])
-        for r in batch.collect()
-    }
-    assert got == want
-
 
 def test_stream_heavy_hitters_match_batch(spark, tmp_path):
     """Streaming heavy hitters (round 5): windowed CMS + Misra-Gries in
@@ -200,58 +67,3 @@ def test_stream_heavy_hitters_match_batch(spark, tmp_path):
     )
     assert got == want
     assert [u for _, u, _ in got] == [1, 7, 9]  # the hand-computed hitters
-
-
-def test_stream_heavy_hitters_sliding_match_batch(spark, tmp_path):
-    """Sliding-window streaming heavy hitters (round 5): events join
-    overlapping windows (120s length, 60s slide — every event in two),
-    one CMS+MG state row per OPEN window, timeout at window_start+length;
-    full-replay output must equal the batch twin on every closed window."""
-    import os
-    import time
-
-    import pandas as pd
-
-    from spark_text_clustering_spark.streaming.heavy_hitters import (
-        heavy_hitters_sliding_batch,
-        heavy_hitters_sliding_stream,
-    )
-
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-    S = lambda s: t0 + pd.Timedelta(seconds=s)  # noqa: E731
-    src = str(tmp_path / "hh_slide_src")
-    os.makedirs(src)
-
-    def write(name, rows, mtime):
-        pdf = pd.DataFrame(rows, columns=["user_id", "ts"])
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        path = os.path.join(src, name)
-        pdf.to_parquet(path)
-        os.utime(path, (mtime, mtime))
-
-    base = time.time()
-    write("f1.parquet", [(1, S(10)), (1, S(20)), (1, S(40)), (1, S(50)),
-                         (2, S(30))], base)
-    write("f2.parquet", [(1, S(65)), (3, S(70)), (3, S(90)), (3, S(110))], base + 10)
-    write("f3.parquet", [(999, S(1000))], base + 20)
-    write("f4.parquet", [(999, S(10000))], base + 30)
-
-    out = heavy_hitters_sliding_stream(
-        spark, src, window_seconds=120, slide_seconds=60, support=0.25,
-        delay_seconds=60, table_name="t_hh_slide",
-    )
-    cutoff = pd.Timestamp("2024-01-01 00:08:00")
-    got = sorted(
-        (r["window_start"], r["user_id"], r["cnt"])
-        for r in out.collect()
-        if r["window_start"] < cutoff
-    )
-    events = spark.createDataFrame(pd.read_parquet(src), "user_id long, ts timestamp")
-    want = sorted(
-        (r["window_start"], r["user_id"], r["cnt"])
-        for r in heavy_hitters_sliding_batch(events, 120, 60, 0.25).collect()
-        if r["window_start"] < cutoff
-    )
-    assert got == want
-    # the overlap is real: user1 must appear in more than one window
-    assert len({w for w, u, _ in got if u == 1}) >= 2

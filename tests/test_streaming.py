@@ -10,7 +10,6 @@ from spark_text_clustering_spark.streaming.windows import (
     run_stream_available_now,
     session_windows_per_user,
     sliding_hourly_by_type,
-    streaming_dedup,
     tumbling_daily_agg,
 )
 
@@ -47,14 +46,6 @@ def test_session_window_batch_equivalence(spark):
         table_name="t_session",
     )
     assert _as_sets(stream) == _as_sets(batch)
-
-
-def test_streaming_dedup_drops_replayed_duplicates(spark):
-    n_events = load_table(spark, SF_SMALL, "events").count()
-    deduped = streaming_dedup(spark, SF_SMALL, table_name="t_dedup")
-    # input was the events file twice; dedup on event_id must return each once
-    assert deduped.count() == n_events
-    assert deduped.select("event_id").distinct().count() == n_events
 
 
 def test_watermark_withholds_unfinalized_windows(spark):

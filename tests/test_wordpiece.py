@@ -180,20 +180,3 @@ def test_wordpiece_encode_covers_merges(spark):
     the longest-match path is exercised, not just single-char fallback."""
     rows = wordpiece_encode_corpus(spark, SF_SMALL).collect()
     assert any(len(r["token"].replace("##", "")) >= 2 for r in rows)
-
-
-def test_wordpiece_vocab_roundtrip(spark, tmp_path):
-    """Durable-artifact parity with BPE/unigram: the saved-and-reloaded
-    vocabulary is identical, so longest-match encoding from the loaded
-    artifact can never drift from the in-session one."""
-    from spark_text_clustering_spark.operators.textprep import (
-        wordpiece_load_vocab,
-        wordpiece_save_vocab,
-        wordpiece_vocab,
-    )
-
-    vocab = wordpiece_vocab(spark, SF_SMALL)
-    assert vocab and any(s.startswith("##") for s in vocab)
-    path = str(tmp_path / "wp_vocab")
-    wordpiece_save_vocab(spark, vocab, path)
-    assert wordpiece_load_vocab(spark, path) == vocab
